@@ -10,17 +10,20 @@ Execution is forced with the noop sink (full computation, no driver
 collect) so timings measure the distributed plan, not result transfer.
 
 SHARED-FRAME TIMING SEMANTICS (declared; VERDICT r11 item 9): several
-corpus-token entries read quality_ops.doc_tokens(), a session-keyed
-persisted token frame (the BM25 pattern, r04). Under this bench's
-prepared-plan + warm-pass contract the frame is built once, in the
-FIRST consumer's untimed warm pass, so every consumer's timed wall
-reflects steady-state reads of the shared cache — deliberately: a
-serving deployment keeps exactly such a frame hot, and re-tokenizing
-per entry would time the same regex work k times. The cost is not
-hidden elsewhere: ratio/floor captures clear the cache between entries
-(scripts/ratio_capture.py), and `python bench.py --clear-between`
-(diagnostic mode, default off, JSON line shape unchanged) makes each
-entry pay its own shared-frame builds for an apples-to-apples check.
+entries read persisted frames shared per session and source file
+(sources.tables.shared_frame: the doc_tokens token stream, the BM25
+postings, the co-purchase graph's edges and degrees). Under this
+bench's prepared-plan + warm-pass contract each frame is built once,
+in the FIRST consumer's untimed warm pass, so every consumer's timed
+wall reflects steady-state reads of the shared frame — deliberately: a
+serving deployment keeps exactly such a frame hot, and rebuilding it
+per entry would time the same work k times. The cost is not hidden
+elsewhere: `python bench.py --clear-between` (diagnostic mode, default
+off, JSON line shape unchanged) calls sources.tables.
+clear_shared_frames(spark) before each entry and rebuilds its handle,
+so each entry's untimed warm pass pays its own shared-frame builds for
+an apples-to-apples check; the ratio and floor captures apply the same
+reset between entries.
 """
 
 from __future__ import annotations
@@ -311,21 +314,6 @@ def output_payload(
     }
 
 
-def _clear_session_caches(spark) -> None:
-    """--clear-between hygiene (VERDICT r11 item 6): drop every cached
-    frame and the doc_tokens session cache so each entry's timed runs
-    pay their own shared-frame builds — the same between-entry reset
-    scripts/ratio_capture.py applies. Diagnostic mode only; the default
-    steady-state contract is unchanged."""
-    spark.catalog.clearCache()
-    try:
-        from scout_spark.inventory.quality_ops import _DOC_TOKENS_CACHE
-
-        _DOC_TOKENS_CACHE.clear()
-    except Exception:
-        pass
-
-
 def main() -> None:
     import sys
 
@@ -342,6 +330,7 @@ def main() -> None:
 
     from scout_spark.inventory import load_all
     from scout_spark.session import get_spark
+    from scout_spark.sources.tables import clear_shared_frames
 
     spark = get_spark("scout-spark-bench")
     # AQE stays ON in the engine defaults (get_spark) and is exercised by
@@ -385,12 +374,12 @@ def main() -> None:
     timings: dict[str, float] = {}
     for name in HEADLINE:
         if clear_between:
-            # diagnostic mode: entries that lean on session-shared
-            # cached frames (doc_tokens et al.) pay the build in their
-            # own wall; prepared handles recompute unpersisted inputs.
-            _clear_session_caches(spark)
-            if name not in E2E_REBUILD:
-                handles[name] = registry[name].spark(spark, sf_dir)
+            # diagnostic mode (VERDICT r11 item 6): drop every cached
+            # frame, shared ones included, then rebuild the handle so
+            # its untimed warm pass re-persists the shared frames it
+            # reads and the timed runs pay no stale-handle recompute.
+            clear_shared_frames(spark)
+            handles[name] = registry[name].spark(spark, sf_dir)
             handles[name].write.format("noop").mode("overwrite").save()
         runs = []
         for _ in range(3):

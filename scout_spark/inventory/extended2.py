@@ -205,25 +205,25 @@ def geocode_reverse_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     return engine.reverse(3.139, 101.6869, limit=5)
 
 
-_GEO_ENGINE_CACHE: dict[int, object] = {}
-
-
 def _fixture_engine(spark: SparkSession):
+    """Engine over the deterministic fixture gazetteer. Its pois and
+    admin frames are shared per session (sources.tables.shared_frame):
+    they derive from no source file, so the session alone keys them."""
     from scout_spark.etl.fixtures import raw_osm_fixture
     from scout_spark.etl.gazetteer import build_admin, build_pois
     from scout_spark.plans.geocode import GeocodeSettings, ScoutEngine
+    from scout_spark.sources.tables import shared_frame
 
-    engine = _GEO_ENGINE_CACHE.get(id(spark))
-    if engine is None:
-        raw = raw_osm_fixture(spark, n_pois=300)
-        engine = ScoutEngine(
-            spark,
-            build_pois(raw).cache(),
-            build_admin(raw),
-            GeocodeSettings(use_pandas_udf=False),
-        )
-        _GEO_ENGINE_CACHE[id(spark)] = engine
-    return engine
+    def from_fixture(build_table):
+        return lambda: build_table(raw_osm_fixture(spark, n_pois=300))
+
+    key = (spark.sparkContext.applicationId,)
+    return ScoutEngine(
+        spark,
+        shared_frame("geocode_fixture_pois", key, from_fixture(build_pois)),
+        shared_frame("geocode_fixture_admin", key, from_fixture(build_admin)),
+        GeocodeSettings(use_pandas_udf=False),
+    )
 
 
 @register(

@@ -94,7 +94,7 @@ def hierarchy_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shuffle join below is the production plan.
     from scout_spark.sources.tables import parquet_rows
 
-    n_nodes = parquet_rows(sf_dir, "customer")
+    n_nodes = parquet_rows(spark, sf_dir, "customer")
     bcast = n_nodes is not None and n_nodes <= _PJ_BROADCAST_ROWS
     for _ in range(_PJ_ROUNDS):
         g = f.select(

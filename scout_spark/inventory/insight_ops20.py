@@ -196,7 +196,7 @@ def dist_lorenz_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         rn_out="rn",
         cum_out="cum",
-        known_count=parquet_rows(sf_dir, "orders"),
+        known_count=parquet_rows(spark, sf_dir, "orders"),
     )
     decs = spark.range(1, 11).select(F.col("id").alias("dec"))
     pts = decs.crossJoin(F.broadcast(tot)).select(

@@ -398,7 +398,7 @@ def agg_pareto_8020_contribution(
         "cents",
         rn_out="rn",
         cum_out="cum",
-        known_count=parquet_rows(sf_dir, "orders"),
+        known_count=parquet_rows(spark, sf_dir, "orders"),
     ).crossJoin(F.broadcast(totals))
     k80 = F.min(
         F.when(F.col("cum") * 5 >= F.col("total") * 4, F.col("rn"))

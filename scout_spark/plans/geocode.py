@@ -80,7 +80,7 @@ class ScoutEngine:
         self.spark = spark
         self.settings = settings or GeocodeSettings()
         self.pois = pois
-        self.admin = admin.cache()
+        self.admin = admin if admin.is_cached else admin.cache()
         self.token_index = None
         if self.settings.use_token_index:
             from scout_spark.operators.inverted_index import build_token_index

@@ -2,10 +2,10 @@
 user-facing boundary (reference app.py:41-120: POST /v1/geocode/forward,
 GET /healthz, Server-Timing/X-Process-Time middleware).
 
-Uses FastAPI+uvicorn when importable (the reference's stack); otherwise
-falls back to a stdlib ThreadingHTTPServer speaking the SAME wire
-contract — request body ``{"candidates": [{"text": ...}], "country",
-"city_hint", "limit"}`` (plain-string candidates also accepted),
+A stdlib ThreadingHTTPServer in place of the reference's FastAPI +
+uvicorn stack, speaking the SAME wire contract — request body
+``{"candidates": [{"text": ...}], "country", "city_hint", "limit"}``
+(plain-string candidates also accepted),
 response ``{"hits": [...]}``, schema-validated 422s with FastAPI's
 ``{"detail": [{"type", "loc", "msg", "input"}]}`` error envelope
 (plans/openapi.py::validate_forward), a generated OpenAPI 3.1 document
@@ -26,13 +26,6 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from scout_spark.plans.api import forward_geocode
 from scout_spark.plans.geocode import ScoutEngine
 from scout_spark.plans.openapi import openapi_spec, validate_forward
-
-try:  # the reference's stack, when available
-    import fastapi  # noqa: F401
-
-    HAVE_FASTAPI = True
-except ImportError:
-    HAVE_FASTAPI = False
 
 
 def make_handler(engine: ScoutEngine):

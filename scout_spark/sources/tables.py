@@ -10,6 +10,8 @@ PushedFilters / ReadSchema).
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,22 +30,34 @@ TABLES = (
 )
 
 
-# DataFrame handles are immutable and reusable: cache per (app, dir,
-# table, file-mtime) so repeated queries don't re-list files and re-read
-# parquet footers on every call (driver-side latency, ~50ms per load).
-# applicationId (not id(spark)) keys the session — a recycled object id
-# would serve plans bound to a shut-down SparkContext; the mtime
-# invalidates after a rewrite/compaction of the file.
-_df_cache: dict[tuple[str, str, str, float], DataFrame] = {}
+def source_key(
+    spark: SparkSession, sf_dir: str, table: str
+) -> tuple[str, str, str, int]:
+    """The one staleness rule for everything cached from a source table:
+    ``(applicationId, sf_dir, table, mtime of <sf_dir>/<table>.parquet)``.
+
+    applicationId (not id(spark)) keys the session — a recycled object
+    id would serve plans bound to a shut-down SparkContext; the mtime
+    (in ns) moves after a rewrite or compaction of the file. A path that
+    cannot be stat'ed raises OSError (FileNotFoundError when missing):
+    nothing is ever cached under a sentinel mtime."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    return (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        table,
+        os.stat(path).st_mtime_ns,
+    )
+
+
+# DataFrame handles are immutable and reusable: cache them per source
+# key so repeated queries don't re-list files and re-read parquet
+# footers on every call (driver-side latency, ~50ms per load).
+_df_cache: dict[tuple[str, str, str, int], DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = -1.0
-    key = (spark.sparkContext.applicationId, sf_dir, name, mtime)
+    key = source_key(spark, sf_dir, name)
     cached = _df_cache.get(key)
     if cached is not None:
         return cached
@@ -89,10 +103,10 @@ def widen_if_narrow(df: DataFrame, target: int | None = None) -> DataFrame:
     return df.repartition(t)
 
 
-_parquet_rows_cache: dict[str, int] = {}
+_parquet_rows_cache: dict[tuple[str, str, str, int], int] = {}
 
 
-def parquet_rows(sf_dir: str, name: str) -> int | None:
+def parquet_rows(spark: SparkSession, sf_dir: str, name: str) -> int | None:
     """Exact row count of a source table from the parquet FOOTER —
     driver-side pyarrow metadata read, no Spark job. Used as a cheap
     upper bound for measured small-frame gates (operators/rank.py):
@@ -100,19 +114,62 @@ def parquet_rows(sf_dir: str, name: str) -> int | None:
     exceed the table's row count, so the gate can fire without a
     count() action. Returns None for a missing/multi-file path (the
     gate then takes the distributed branch — always safe)."""
-    import os
+    import pyarrow.parquet as pq
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if path in _parquet_rows_cache:
-        return _parquet_rows_cache[path]
     try:
-        import pyarrow.parquet as pq
-
-        n = pq.ParquetFile(path).metadata.num_rows
+        key = source_key(spark, sf_dir, name)
+        if key not in _parquet_rows_cache:
+            path = os.path.join(sf_dir, f"{name}.parquet")
+            _parquet_rows_cache[key] = pq.ParquetFile(path).metadata.num_rows
     except Exception:
         return None
-    _parquet_rows_cache[path] = n
-    return n
+    return _parquet_rows_cache[key]
+
+
+# Persisted frames shared by several registry entries of one session
+# (the corpus token stream, the BM25 postings, the co-purchase graph,
+# the geocode fixture's gazetteer): name -> (key, frame). At most one
+# live materialization per name; a call with a new key unpersists the
+# stale frame before building the fresh one. Re-entrant lock: one
+# frame's build may read another shared frame (degrees reads edges).
+_shared: dict[str, tuple[tuple, DataFrame]] = {}
+_shared_lock = threading.RLock()
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass  # session already stopped — blocks died with it
+
+
+def shared_frame(
+    name: str, key: tuple, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The persisted frame ``name`` for ``key`` — ``source_key`` of the
+    table it derives from — built by ``build()`` on a miss. A repeated
+    call with the same key returns the same object."""
+    with _shared_lock:
+        hit = _shared.get(name)
+        if hit is not None:
+            if hit[0] == key:
+                return hit[1]
+            _unpersist(hit[1])
+        df = build().persist()
+        _shared[name] = (key, df)
+        return df
+
+
+def clear_shared_frames(spark: SparkSession) -> None:
+    """Unpersist and drop every shared frame, so the next consumer
+    rebuilds and re-persists its own, then clear the rest of the
+    session's cache (the bare persists registry entries leave behind)
+    — the between-entries reset of bench.py and the capture scripts."""
+    with _shared_lock:
+        for _, df in _shared.values():
+            _unpersist(df)
+        _shared.clear()
+    spark.catalog.clearCache()
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

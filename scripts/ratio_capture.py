@@ -106,6 +106,7 @@ def main() -> None:
 
     sys.path.insert(0, REPO)
     from scout_spark.session import get_spark
+    from scout_spark.sources.tables import clear_shared_frames
     from scout_spark.testing import oracle_connection
 
     m = _load_entry_module()
@@ -145,20 +146,11 @@ def main() -> None:
 
     for name in names:
         fn = q[name]
-        # between-entries cache hygiene (r11, see floor_capture.py::
-        # _reset_session_caches): a 342-entry sequential capture
-        # otherwise accumulates every bare .persist() the entries
-        # create; the doc_tokens session cache is dropped too and
-        # rebuilds in the entry's untimed warm pass
-        spark.catalog.clearCache()
-        try:
-            from scout_spark.inventory.quality_ops import (
-                _DOC_TOKENS_CACHE,
-            )
-
-            _DOC_TOKENS_CACHE.clear()
-        except Exception:
-            pass
+        # between-entries cache hygiene (r11): a 342-entry sequential
+        # capture otherwise accumulates every bare .persist() the
+        # entries create; the shared frames are dropped too and rebuild
+        # in the entry's untimed warm pass
+        clear_shared_frames(spark)
         # pacing: let self-load decay before the next measurement —
         # bounded per entry AND by a global budget so pacing can never
         # dominate the sweep (past the budget, rows self-label hot)

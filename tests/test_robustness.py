@@ -254,3 +254,27 @@ def test_compression_ratio_nan_input():
 
     assert compression_ratio(float("nan")) == 1.0
     assert compression_ratio(None) == 1.0
+
+
+def test_malformed_curate_barrier_env_falls_back():
+    """A malformed SPARK_GRAFT_CURATE_BARRIER_ROWS degrades to the
+    default with a warning; it must not crash registry load."""
+    import subprocess
+    import sys
+
+    code = (
+        "from scout_spark.inventory import load_all, quality_ops\n"
+        "assert load_all()\n"
+        "print(quality_ops._CURATE_BARRIER_ROWS)\n"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "SPARK_GRAFT_CURATE_BARRIER_ROWS": "abc"},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 0, r.stderr
+    assert r.stdout.strip() == "20000"
+    assert "SPARK_GRAFT_CURATE_BARRIER_ROWS='abc'" in r.stderr
