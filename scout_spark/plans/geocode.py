@@ -3,23 +3,32 @@
 restated as one lazy DataFrame per request.
 
 Pipeline (all semantics preserved, SURVEY.md §2.12):
-  tokenize+dedup (driver) → area bbox resolve (cached admin, top-1 by
-  area) → candidate scan (token-contains ∧ bbox BETWEEN, capped) →
-  score (fuzzy best-sim + type boost + importance [+ proximity iff bbox])
-  → top-k.
+  tokenize+dedup (driver) → area bbox resolve (driver-side admin
+  snapshot, top-1 by area) → candidate scan (token-contains ∧ bbox
+  BETWEEN, capped) → score (fuzzy best-sim + type boost + importance
+  [+ proximity iff bbox]) → top-k.
 
-Scale shape: the scan is filter→project over partition-pruned parquet
-(embarrassingly parallel, no shuffle); scoring is one pandas-UDF stage
-(or pure-Column proxy); top-k is TakeOrderedAndProject. The admin table
-is tiny and cached (reference opens it per-request, app.py:44-56 —
-SURVEY.md §4 O10 replaces that with a long-lived cache).
+Plan shape: a forward request runs at most one Spark job. ``pois`` is
+cached by the engine, so the scan is filter → TakeOrderedAndProject
+(the capped top ``limit_scan`` by importance) over the in-memory table;
+its output crosses into a single Python scoring task (pandas UDF, or
+the pure-Column proxy with no Python at all) and the final top-k is a
+second TakeOrderedAndProject in that same task. The UDF is marked
+non-deterministic in ``_scored`` so that Catalyst cannot push the
+scorer below the cap (PushProjectionThroughLimit would, and the cap
+would then plan as a range-partitioned global sort with a scoring task
+per partition). Bbox resolution reads an admin snapshot collected once
+at construction, so it runs no job; a request with no tokens returns
+an empty relation without a job. The reference opens the admin table
+per request (app.py:44-56 — SURVEY.md §4 O10 replaces that with a
+long-lived cache).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 from functools import reduce
-from operator import and_, or_
+from operator import and_
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,8 +88,31 @@ class ScoutEngine:
     ):
         self.spark = spark
         self.settings = settings or GeocodeSettings()
-        self.pois = pois
-        self.admin = admin if admin.is_cached else admin.cache()
+        self.pois = pois if pois.is_cached else pois.cache()
+        self.admin = admin
+        # admin snapshot for resolve_area_bbox: (admin_level, local norm,
+        # English norm, bbox) per row, sorted by Spark on the resolver's
+        # tie-break (bbox area desc, osm_id), so the first row a hint
+        # matches is the top-1 of ORDER BY area DESC, osm_id LIMIT 1. One
+        # partition: one job with no exchange, and the table is small.
+        area = (F.col("maxx") - F.col("minx")) * (F.col("maxy") - F.col("miny"))
+        self._admin_rows = [
+            (r[0], r[1] or "", r[2] or "", tuple(r[3:]))
+            for r in admin.coalesce(1)
+            .sortWithinPartitions(area.desc(), F.col("osm_id"))
+            .select(
+                "admin_level",
+                "name_local_norm",
+                "name_en_norm",
+                "minx",
+                "miny",
+                "maxx",
+                "maxy",
+                "center_lat",
+                "center_lon",
+            )
+            .collect()
+        ]
         self.token_index = None
         if self.settings.use_token_index:
             from scout_spark.operators.inverted_index import build_token_index
@@ -91,42 +123,28 @@ class ScoutEngine:
     def resolve_area_bbox(
         self, city_hint: str | None, country: str | None
     ) -> tuple[float, float, float, float, float, float] | None:
-        """Top-1 admin row by bbox area; city (admin_level ≥ 6) tried
-        before country (= 2); token-contains match on normalized names.
-        Collected to driver literals — the procedural shape the reference
-        uses (its output becomes bind params of the next query)."""
-        for hint, level_pred in (
-            (city_hint, F.col("admin_level") >= 6),
-            (country, F.col("admin_level") == 2),
+        """Top-1 admin row by bbox area, then osm_id; city (admin_level
+        ≥ 6) tried before country (= 2); a NULL level never matches;
+        every hint token must be contained in the normalized local or
+        English name. Runs on the driver over the admin snapshot taken
+        at construction (no Spark job); returns driver literals that
+        become constants of the request plan, the procedural shape the
+        reference uses (its output becomes bind params of the next
+        query)."""
+        for hint, level_ok in (
+            (city_hint, lambda level: level >= 6),
+            (country, lambda level: level == 2),
         ):
             toks = _tokens(hint)
             if not toks:
                 continue
-            pred = reduce(
-                and_,
-                [
-                    (
-                        F.coalesce(F.col("name_local_norm"), F.lit("")).contains(t)
-                        | F.coalesce(F.col("name_en_norm"), F.lit("")).contains(t)
-                    )
-                    for t in toks
-                ],
-            )
-            row = (
-                self.admin.where(pred & level_pred)
-                .orderBy(
-                    (
-                        (F.col("maxx") - F.col("minx"))
-                        * (F.col("maxy") - F.col("miny"))
-                    ).desc(),
-                    F.col("osm_id"),
-                )
-                .select("minx", "miny", "maxx", "maxy", "center_lat", "center_lon")
-                .limit(1)
-                .collect()
-            )
-            if row:
-                return tuple(float(v) for v in row[0])
+            for level, local, en, bbox in self._admin_rows:
+                if (
+                    level is not None
+                    and level_ok(level)
+                    and all(t in local or t in en for t in toks)
+                ):
+                    return tuple(float(v) for v in bbox)
         return None
 
     # -- candidate scan (reference repo.py:48-71) -------------------------
@@ -178,7 +196,10 @@ class ScoutEngine:
         target_local = F.coalesce(F.col("name_local_norm"), canon(F.col("name_local")))
         target_en = F.coalesce(F.col("name_en_norm"), canon(F.col("name_en")))
         if s.use_pandas_udf:
-            sim_fn = best_sim_udf(query_norms)
+            # non-deterministic keeps the scorer above the scan cap: a
+            # deterministic projection is pushed below the cap's
+            # LocalLimit, which breaks TakeOrderedAndProject planning
+            sim_fn = best_sim_udf(query_norms).asNondeterministic()
             best_sim = F.greatest(sim_fn(target_local), sim_fn(target_en))
         else:
             sims = [
@@ -227,10 +248,14 @@ class ScoutEngine:
         toks = list(seen)
         query_norms = [q for q in (_norm_text(t) for t in candidates) if q]
         if not toks:
-            return self._empty_hits()
-        bbox = self.resolve_area_bbox(city_hint, country)
-        cand = self.fetch_candidates(toks, bbox)
-        scored = self._scored(cand, query_norms, bbox)
+            # an empty relation: Catalyst folds it to a local scan, no job
+            scored = self.pois.where(F.lit(False)).withColumn(
+                "score", F.lit(None).cast("double")
+            )
+        else:
+            bbox = self.resolve_area_bbox(city_hint, country)
+            cand = self.fetch_candidates(toks, bbox)
+            scored = self._scored(cand, query_norms, bbox)
         return scored.select(
             F.coalesce(F.col("name_local"), F.col("name_en"), F.lit("")).alias(
                 "name"
@@ -269,11 +294,4 @@ class ScoutEngine:
             )
             .orderBy(F.col("distance_km"), F.col("osm_id"))
             .limit(limit)
-        )
-
-    def _empty_hits(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [],
-            "name string, lat double, lon double, country string, state string,"
-            " city string, osm_id bigint, kind string, score double",
         )
